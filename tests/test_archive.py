@@ -362,3 +362,112 @@ def test_compact_archive_merges_files_bit_equal(spark, tmp_path):
         for r in spark.read.parquet(path).select("name", "t", "value").collect()
     }
     assert got == full
+
+
+SPECS3 = [("wmean", 60), ("max", 600), ("min", 3600)]
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.select("name", "t", "value").collect())
+
+
+def test_rematerialize_replaces_archives_without_stale_files(spark, tmp_path):
+    """Writing into an existing root replaces every archive whole: the
+    directories hold only the new rollups (no stale parquet from the
+    first write) and no staging directory is left under root."""
+    import os
+
+    from tgres_spark.archive import materialize_archives
+    from tgres_spark.operators.consolidate import consolidate
+
+    def mk(prefix, n):
+        rows = [(f"{prefix}.{i}", t, float(t % 11 + i))
+                for i in range(n) for t in range(0, 7200, 30)]
+        return spark.createDataFrame(rows, "name string, t long, value double")
+
+    root = str(tmp_path / "rra")
+    materialize_archives(spark, mk("old", 5).repartition(4), SPECS3, root)
+    new = mk("new", 2)
+    arch = materialize_archives(spark, new, SPECS3, root)
+    assert sorted(os.listdir(root)) == sorted(f"{cf}_{st}" for cf, st in SPECS3)
+    for (cf, step), a in zip(SPECS3, arch.archives[1:]):
+        want = _rows(consolidate(new, step, cf=cf))
+        assert _rows(spark.read.parquet(f"{root}/{cf}_{step}")) == want
+        assert _rows(a.df) == want
+
+
+def test_empty_input_yields_readable_empty_archives(spark, tmp_path):
+    from tgres_spark.archive import materialize_archives
+
+    root = str(tmp_path / "rra")
+    sf = spark.createDataFrame([], "name string, t long, value double")
+    arch = materialize_archives(spark, sf, SPECS3, root)
+    assert [(a.cf, a.step) for a in arch.archives[1:]] == SPECS3
+    for (cf, step), a in zip(SPECS3, arch.archives[1:]):
+        assert a.df.columns == ["name", "t", "value"]
+        assert a.df.count() == 0
+        assert spark.read.parquet(f"{root}/{cf}_{step}").count() == 0
+
+
+def test_partitioned_write_keeps_day_bucket_layout(spark, tmp_path):
+    import os
+
+    from tgres_spark.archive import materialize_archives
+
+    t0 = 1704067200
+    rows = [(f"m.{i}", t0 + j * 900, float(j)) for i in range(6)
+            for j in range(2 * 96)]
+    sf = spark.createDataFrame(rows, "name string, t long, value double")
+    root = str(tmp_path / "rra")
+    arch = materialize_archives(
+        spark, sf, SPECS3, root, partitioned=True, n_buckets=4
+    )
+    assert sorted(os.listdir(root)) == sorted(f"{cf}_{st}" for cf, st in SPECS3)
+    for cf, step in SPECS3:
+        path = f"{root}/{cf}_{step}"
+        days = [d for d in os.listdir(path) if not d.startswith((".", "_"))]
+        assert len(days) >= 2 and all(d.startswith("day=") for d in days)
+        for d in days:
+            buckets = [b for b in os.listdir(f"{path}/{d}")
+                       if not b.startswith((".", "_"))]
+            assert buckets and all(b.startswith("bucket=") for b in buckets)
+            for b in buckets:
+                assert any(f.endswith(".parquet")
+                           for f in os.listdir(f"{path}/{d}/{b}"))
+    for a in arch.archives[1:]:
+        assert a.buckets == 4
+        assert a.df.columns == ["name", "t", "value", "day", "bucket"]
+
+
+def test_three_rra_ingest_write_runs_few_jobs(spark, tmp_path):
+    """Parse → flush → three RRAs is ONE write: the shared input is
+    computed once for all archives (exchange reuse), so the whole
+    materialization stays within a handful of Spark jobs."""
+    from tgres_spark.aggregator import statsd_flush
+    from tgres_spark.archive import materialize_archives
+    from tgres_spark.sources.graphite import parse_graphite_lines
+    from tgres_spark.sources.statsd import parse_statsd_packets
+
+    lines = spark.createDataFrame(
+        [(f"web.h{i % 5}.hits {i % 7}.5 {1000 + i * 13}",) for i in range(400)]
+        + [("not a metric",)],
+        "line string",
+    )
+    packets = ["c1:1|c", "g1:5|g", "g1:+2|g", "tm:12|ms", "c1:3|c|@0.5"]
+    pk = spark.createDataFrame(
+        [(1000 + i * 7, packets[i % len(packets)]) for i in range(200)],
+        "t long, packet string",
+    )
+    sf = parse_graphite_lines(lines).unionAll(
+        statsd_flush(parse_statsd_packets(pk), 60)
+    )
+    sc = spark.sparkContext
+    group = "test-three-rra-write"
+    sc.setJobGroup(group, "three-RRA archive write")
+    try:
+        arch = materialize_archives(spark, sf, SPECS3, str(tmp_path / "rra"))
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= 8, len(jobs)
+    assert all(a.df.count() > 0 for a in arch.archives[1:])

@@ -114,6 +114,87 @@ def test_statsd_flush_windows_are_separate(spark):
     assert math.isclose(r[("stats.c1", 120)], 2.0)
 
 
+def _flush_vs_oracle(spark, packets):
+    """statsd_flush of ``(t, packet)`` pairs next to its DuckDB twin
+    (the three flush_*_sql families over parse_statsd_packets_sql);
+    returns both as sorted (name, t, value) lists."""
+    import duckdb
+
+    from tgres_spark.aggregator import (
+        flush_counters_sql,
+        flush_gauges_sql,
+        flush_timers_sql,
+    )
+    from tgres_spark.sources.statsd import parse_statsd_packets_sql
+
+    pk = spark.createDataFrame(packets, "t long, packet string")
+    got = sorted(
+        (r["name"], r["t"], r["value"])
+        for r in statsd_flush(parse_statsd_packets(pk), 60).collect()
+    )
+    con = duckdb.connect()
+    con.execute("CREATE TABLE pk (t BIGINT, packet VARCHAR)")
+    con.executemany("INSERT INTO pk VALUES (?, ?)", packets)
+    parsed = parse_statsd_packets_sql("SELECT t, packet FROM pk")
+    exp = sorted(
+        tuple(r)
+        for sql in (
+            flush_counters_sql(parsed, 60),
+            flush_gauges_sql(parsed, 60),
+            flush_timers_sql(parsed, 60),
+        )
+        for r in con.execute(sql).fetchall()
+    )
+    return got, exp
+
+
+def test_statsd_flush_all_families_share_one_slot(spark):
+    """One name carrying a counter, a gauge set, a gauge delta and a
+    timer in the same slot yields every family's rows, each equal to
+    its DuckDB twin."""
+    got, exp = _flush_vs_oracle(spark, [
+        (5, "x:2|c"), (6, "x:4|c|@0.5"), (7, "x:10|g"), (8, "x:+3|g"),
+        (9, "x:12|ms"), (10, "x:3|ms"), (11, "x:7|ms"),
+    ])
+    assert got == exp
+    names = {n for n, _t, _v in got}
+    assert {"stats.x", "stats.gauges.x", "stats.timers.x.count"} <= names
+    assert len(got) == 2 + 8  # counter + gauge + 8 timer stats
+    vals = {n: v for n, _t, v in got}
+    assert math.isclose(vals["stats.x"], 10.0 / 60.0)
+    assert vals["stats.gauges.x"] == 13.0
+    assert vals["stats.timers.x.lower"] == 3.0
+
+
+def test_statsd_flush_gauge_tie_in_same_second_takes_larger(spark):
+    got, exp = _flush_vs_oracle(
+        spark, [(5, "g:1|g"), (20, "g:4|g"), (20, "g:9|g"), (20, "g:2|g")]
+    )
+    assert got == exp == [("stats.gauges.g", 60, 9.0)]
+
+
+def test_statsd_flush_delta_only_window(spark):
+    """A window holding only deltas adjusts a base of 0; the earlier
+    window's set value does not carry over."""
+    got, exp = _flush_vs_oracle(
+        spark, [(5, "g:50|g"), (70, "g:+1.5|g"), (80, "g:-4|g")]
+    )
+    assert got == exp
+    assert got == [("stats.gauges.g", 60, 50.0), ("stats.gauges.g", 120, -2.5)]
+
+
+def test_statsd_flush_persists_nothing(spark):
+    """The flush is one lazy plan: running it leaves no cached RDD."""
+    pk = spark.createDataFrame(
+        [(5, "c:1|c"), (6, "g:2|g"), (7, "t:3|ms")], "t long, packet string"
+    )
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    out = statsd_flush(parse_statsd_packets(pk), 60)
+    assert out.count() == 1 + 1 + 8
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_statsd_parse_cross_engine_on_adversarial_packets(spark):
     """Spark parse and the DuckDB oracle must agree row-for-row on
     grammar edge cases: pipes inside names, signs, sample-rate

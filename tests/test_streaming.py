@@ -405,7 +405,7 @@ def test_name_catalog_create_on_first_write(spark, tmp_path):
 
 def test_statsd_gauges_stream_matches_batch(spark, tmp_path):
     """Streaming gauge windows (last set value, tie → max, plus delta
-    adjustments) must equal the batch _flush_gauges on the same
+    adjustments) must equal the batch statsd_flush gauges on the same
     packets, including a delta-only window (base 0)."""
     from tgres_spark.aggregator import statsd_flush
     from tgres_spark.sources.statsd import parse_statsd_packets

@@ -16,9 +16,20 @@ Deviation (documented): aggregator.go:185-187 fills ``cumul`` with
 ``cumul[n] += v`` on a fresh slice, so its ".sum" is really the max
 sample — a bug. We implement the statsd-standard cumulative sum.
 
-Spark shape: one groupBy (name, window) with conditional aggregates —
-single shuffle; timers build a sorted array and left-fold partial
-sums so both engines sum in the same order.
+Spark shape: one groupBy (name, window) over the parsed relation with
+metric-filtered aggregates — one shuffle, no cache, no join:
+
+- counters: sum(micro6(value / sample));
+- gauge sets: max(struct(t, value)) — the latest set, ties at the same
+  second broken to the larger value (the streaming gauge rule in
+  streaming/ingest.py);
+- gauge deltas: sum(micro6(value));
+- timers: array_sort(collect_list(value)), then left-folded partial
+  sums so both engines sum in the same order.
+
+One generator emits every row family from that one aggregate, each
+where its own count is non-empty; the ``flush_*_sql`` functions are
+the DuckDB oracle twins, one per family.
 """
 
 from __future__ import annotations
@@ -44,36 +55,44 @@ def statsd_flush(
     One output series per counter/gauge; 5 + 3·len(thresholds) per
     timer (count/lower/upper/sum/mean + upper_p/sum_p/mean_p per
     configured percentile, mirroring aggregator.State.Thresholds).
+
+    One groupBy (name, slot) computes every family's buffer with
+    metric-filtered aggregates, and one generator emits each family's
+    rows from it where the family's own count is non-empty. (A union of
+    per-family projections would not share the aggregate: column
+    pruning gives each branch its own, so the parse would run thrice.)
     """
-    # fence the shared parse (optimization round 13, guide §7.2): the
-    # parsed relation feeds FOUR branches (counters, gauge sets, gauge
-    # deltas, timers) and each union branch re-evaluated the whole
-    # regex-parse projection from the packets scan; one cache pass
-    # computes it once. Both callers are batch queries (the streaming
-    # flush path has its own window engine in streaming/ingest.py).
-    parsed = parsed.persist()  # fence: returned plan reads this cache
-    counters = _flush_counters(parsed, flush_s, prefix)
-    gauges = _flush_gauges(parsed, flush_s, prefix)
-    timers = _flush_timers(parsed, flush_s, prefix, thresholds)
-    return counters.unionAll(gauges).unionAll(timers)
-
-
-def _flush_counters(parsed: DataFrame, flush_s: int, prefix: str) -> DataFrame:
-    c = parsed.where(F.col("metric") == "c")
-    rate = (
-        F.sum(micro6(F.col(VALUE) / F.col("sample"))).cast("double")
-        / 1000000.0
-        / float(flush_s)
+    metric = F.col("metric")
+    is_set = (metric == "g") & ~F.col("delta")
+    is_delta = (metric == "g") & F.col("delta")
+    grouped = parsed.groupBy(
+        F.col(NAME), slot_end(flush_s).alias("slot")
+    ).agg(
+        F.count(F.when(metric == "c", 1)).alias("n_c"),
+        F.sum(
+            F.when(metric == "c", micro6(F.col(VALUE) / F.col("sample")))
+        ).alias("c_sum"),
+        F.count(F.when(metric == "g", 1)).alias("n_g"),
+        # last set value: latest t, ties at the same second break to the
+        # larger value (struct order) — the streaming gauge rule
+        F.max(F.when(is_set, F.struct(F.col(T), F.col(VALUE)))).alias("last_set"),
+        F.sum(F.when(is_delta, micro6(F.col(VALUE)))).alias("d_sum"),
+        # ONE aggregate buffer (the sorted sample list); every timer stat
+        # is a cheap post-projection on it
+        F.array_sort(
+            F.collect_list(F.when(metric == "ms", F.col(VALUE)))
+        ).alias("arr"),
     )
-    return (
-        c.groupBy(F.col(NAME), slot_end(flush_s).alias("slot"))
-        .agg(rate.alias("v"))
-        .select(
-            F.concat(F.lit(prefix + "."), F.col(NAME)).alias(NAME),
-            F.col("slot").alias(T),
-            F.col("v").alias(VALUE),
-        )
+    counter = F.col("c_sum").cast("double") / 1000000.0 / float(flush_s)
+    gauge = F.coalesce(F.col("last_set")[VALUE], F.lit(0.0)) + F.coalesce(
+        F.col("d_sum").cast("double") / 1000000.0, F.lit(0.0)
     )
+    families = [
+        (F.col("n_c") > 0, [(f"{prefix}.", "", counter)]),
+        (F.col("n_g") > 0, [(f"{prefix}.gauges.", "", gauge)]),
+        (F.size("arr") > 0, _timer_rows(prefix, thresholds)),
+    ]
+    return _emit_rows(_fold_timers(grouped, thresholds), families)
 
 
 def flush_counters_sql(parsed_sql: str, flush_s: int, prefix: str = "stats") -> str:
@@ -82,37 +101,6 @@ def flush_counters_sql(parsed_sql: str, flush_s: int, prefix: str = "stats") -> 
         f"SELECT '{prefix}.' || name AS name, {slot} AS t, "
         f"CAST(SUM(CAST(FLOOR((value / sample) * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0 / {float(flush_s)!r} AS value "
         f"FROM ({parsed_sql}) WHERE metric = 'c' GROUP BY name, {slot}"
-    )
-
-
-def _flush_gauges(parsed: DataFrame, flush_s: int, prefix: str) -> DataFrame:
-    """Non-delta gauges: last set value per window (ties → max value,
-    same cross-engine tie-break as consolidate cf=last). Delta gauges
-    ride on top as a cumulative adjustment within the window."""
-    from pyspark.sql import Window
-
-    g = parsed.where(F.col("metric") == "g")
-    sets = g.where(~F.col("delta"))
-    pts = sets.select(
-        NAME, F.col(T), slot_end(flush_s).alias("slot"), F.col(VALUE).alias("v")
-    )
-    wmax = Window.partitionBy(NAME, "slot")
-    last_set = (
-        pts.withColumn("tmax", F.max(T).over(wmax))
-        .where(F.col(T) == F.col("tmax"))
-        .groupBy(NAME, "slot")
-        .agg(F.max("v").alias("base"))
-    )
-    deltas = (
-        g.where(F.col("delta"))
-        .groupBy(F.col(NAME), slot_end(flush_s).alias("slot"))
-        .agg((F.sum(micro6(F.col(VALUE))).cast("double") / 1000000.0).alias("d"))
-    )
-    j = last_set.join(deltas, [NAME, "slot"], "full")
-    return j.select(
-        F.concat(F.lit(prefix + ".gauges."), F.col(NAME)).alias(NAME),
-        F.col("slot").alias(T),
-        (F.coalesce(F.col("base"), F.lit(0.0)) + F.coalesce(F.col("d"), F.lit(0.0))).alias(VALUE),
     )
 
 
@@ -138,21 +126,6 @@ def flush_gauges_sql(parsed_sql: str, flush_s: int, prefix: str = "stats") -> st
     )
 
 
-def _flush_timers(
-    parsed: DataFrame,
-    flush_s: int,
-    prefix: str,
-    thresholds: tuple[int, ...] = THRESHOLDS,
-) -> DataFrame:
-    t_ = parsed.where(F.col("metric") == "ms")
-    # ONE aggregate buffer (the sorted sample list); every stat is a
-    # cheap post-projection on it — not six parallel collect_lists.
-    grouped = t_.groupBy(F.col(NAME), slot_end(flush_s).alias("slot")).agg(
-        F.array_sort(F.collect_list(VALUE)).alias("arr")
-    )
-    return timer_stats_from_sorted(grouped, prefix, thresholds)
-
-
 def timer_stats_from_sorted(
     grouped: DataFrame,
     prefix: str,
@@ -162,65 +135,91 @@ def timer_stats_from_sorted(
     is the SORTED timer sample list — shared by the batch flush and
     the streaming window aggregation (identical math by construction).
     """
+    return _emit_rows(
+        _fold_timers(grouped, thresholds),
+        [(F.lit(True), _timer_rows(prefix, thresholds))],
+    )
+
+
+def _lfold(a):
+    return F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x)
+
+
+def _threshold_len(th: int):
+    """Number of sorted samples at or below percentile ``th``."""
+    n = F.size(F.col("arr"))
+    return F.floor(F.lit(th / 100.0) * n.cast("double") + 0.5).cast("int")
+
+
+def _fold_timers(grouped: DataFrame, thresholds: tuple[int, ...]) -> DataFrame:
+    """Add the left-folded sums of the sorted ``arr`` column: ``total``
+    and one ``s_<th>`` prefix sum per threshold.
+
+    Each distinct prefix is folded ONCE: `total` feeds both sum and
+    mean, `s_{th}` feeds sum_th and mean_th — expressed as a
+    pre-projection because expressions get no CSE across select-list
+    entries. Same folds, same division order as the oracle."""
     arr = F.col("arr")
-    n = F.size(arr)
-    lfold = lambda a: F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x)  # noqa: E731
-    # fold the sorted array ONCE per distinct prefix: `total` feeds
-    # both sum and mean, `s_{th}` feeds sum_th and mean_th —
-    # expressed as a pre-projection because expressions get no CSE
-    # across select-list entries (the naive form folded arr 2+2/th
-    # times; CollapseProject keeps this split since the folds are
-    # non-cheap and multiply referenced). Same folds, same division
-    # order — values unchanged.
-    folded = grouped.select(
-        NAME,
-        "slot",
-        "arr",
-        lfold(arr).alias("total"),
+    return grouped.select(
+        "*",
+        _lfold(arr).alias("total"),
         *[
             F.when(
-                F.floor(F.lit(th / 100.0) * n.cast("double") + 0.5).cast("int")
-                - 1
-                >= 0,
-                lfold(
-                    F.slice(
-                        arr,
-                        1,
-                        F.floor(
-                            F.lit(th / 100.0) * n.cast("double") + 0.5
-                        ).cast("int"),
-                    )
-                ),
+                _threshold_len(th) - 1 >= 0,
+                _lfold(F.slice(arr, 1, _threshold_len(th))),
             ).alias(f"s_{th}")
             for th in thresholds
         ],
     )
-    cols = [
-        n.cast("double").alias("count"),
-        F.element_at(arr, 1).alias("lower"),
-        F.element_at(arr, n).alias("upper"),
-        F.col("total").alias("sum"),
-        (F.col("total") / n.cast("double")).alias("mean"),
+
+
+def _timer_rows(prefix: str, thresholds: tuple[int, ...]) -> list[tuple]:
+    """(name prefix, name suffix, value) per timer stat over a
+    _fold_timers relation."""
+    arr = F.col("arr")
+    n = F.size(arr)
+    stats = [
+        ("count", n.cast("double")),
+        ("lower", F.element_at(arr, 1)),
+        ("upper", F.element_at(arr, n)),
+        ("sum", F.col("total")),
+        ("mean", F.col("total") / n.cast("double")),
     ]
-    suffixes = ["count", "lower", "upper", "sum", "mean"]
     for th in thresholds:
-        idx = F.floor(F.lit(th / 100.0) * n.cast("double") + 0.5).cast("int") - 1
-        cols += [
-            F.when(idx >= 0, F.element_at(arr, idx + 1)).alias(f"upper_{th}"),
-            F.col(f"s_{th}").alias(f"sum_{th}"),
-            (F.col(f"s_{th}") / (idx + 1).cast("double")).alias(f"mean_{th}"),
+        idx = _threshold_len(th) - 1
+        stats += [
+            (f"upper_{th}", F.when(idx >= 0, F.element_at(arr, idx + 1))),
+            (f"sum_{th}", F.col(f"s_{th}")),
+            (f"mean_{th}", F.col(f"s_{th}") / (idx + 1).cast("double")),
         ]
-        suffixes += [f"upper_{th}", f"sum_{th}", f"mean_{th}"]
-    wide = folded.select(NAME, "slot", *cols)
-    stack = ", ".join(f"'{s}', `{s}`" for s in suffixes)
-    return wide.selectExpr(
-        "name", "slot", f"stack({len(suffixes)}, {stack}) AS (suffix, value)"
-    ).select(
-        F.concat(
-            F.lit(prefix + ".timers."), F.col(NAME), F.lit("."), F.col("suffix")
-        ).alias(NAME),
+    return [(f"{prefix}.timers.", f".{suffix}", v) for suffix, v in stats]
+
+
+def _emit_rows(grouped: DataFrame, families: list[tuple]) -> DataFrame:
+    """(name, slot, ...) → SeriesFrame through one generator. Each
+    family is (keep, rows), rows = [(name prefix, name suffix, value)];
+    an input row emits a family's rows only where its ``keep`` holds,
+    and only those rows' values are evaluated (ANSI element_at and
+    division would throw on a window without timer samples)."""
+    empty = F.array().cast("array<struct<pre:string,suf:string,v:double>>")
+    arrays = [
+        F.when(
+            keep,
+            F.array(*[
+                F.struct(
+                    F.lit(pre).alias("pre"),
+                    F.lit(suf).alias("suf"),
+                    v.cast("double").alias("v"),
+                )
+                for pre, suf, v in rows
+            ]),
+        ).otherwise(empty)
+        for keep, rows in families
+    ]
+    return grouped.select(NAME, "slot", F.inline(F.concat(*arrays))).select(
+        F.concat(F.col("pre"), F.col(NAME), F.col("suf")).alias(NAME),
         F.col("slot").alias(T),
-        F.col(VALUE).cast("double").alias(VALUE),
+        F.col("v").alias(VALUE),
     )
 
 

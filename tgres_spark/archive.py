@@ -18,7 +18,9 @@ shuffle happens once at write time, not per render.
 
 from __future__ import annotations
 
+import uuid
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -107,6 +109,12 @@ class ArchiveSet:
         return min(cands, key=lambda a: a.step)
 
 
+# Archive files hold (name, t, value); the partitioned layout adds the
+# day/bucket directory columns, typed as partition discovery infers them.
+ARCHIVE_SCHEMA = "name string, t bigint, value double"
+PARTITION_SCHEMA = ARCHIVE_SCHEMA + ", day int, bucket int"
+
+
 def materialize_archives(
     spark: SparkSession,
     sf: DataFrame,
@@ -122,6 +130,21 @@ def materialize_archives(
     The nightly-compaction shape: each archive is one consolidate()
     (single shuffle), written once, served forever.
 
+    All archives go out in ONE write action, the way one PDP stream
+    feeds every RRA of a DS (rrd/ds.go updateRRAs): the per-spec
+    consolidate() relations over the same ``sf`` are tagged with an
+    ``rra=<cf>_<step>`` column and their union is written once with
+    ``partitionBy(rra[, day, bucket])`` into a staging directory
+    ``root/_staging-<id>``, so Catalyst's exchange reuse computes the
+    shared input (scan, parse, flush) once for all archives. Each
+    ``rra=<cf>_<step>`` directory is then moved to ``root/<cf>_<step>``
+    with the Hadoop FileSystem API: an existing archive is replaced
+    only after the new write has succeeded, and a failed write leaves
+    it untouched (the staging directory is removed either way). An
+    archive with no rows is still written, as an empty parquet
+    directory. Archives are read back with their known schema, so no
+    schema-inference job runs.
+
     ``partitioned=True`` writes the docs/SCALE.md layout —
     ``partitionBy(day, bucket=pmod(xxhash64(name), B))`` — so a
     render's time range prunes day directories and an exact-name
@@ -130,30 +153,53 @@ def materialize_archives(
     drops). At 100 TB size B so a (day, bucket) partition lands at
     256 MB–1 GB compressed."""
     out = ArchiveSet(sf, base_step=base_step)
+    rras = {f"{cf}_{step}": (cf, step) for cf, step in specs}
+    if not rras:
+        return out
+    rolled = reduce(DataFrame.unionAll, [
+        consolidate(sf, step, cf=cf, heartbeat=heartbeat).withColumn(
+            "rra", F.lit(rid)
+        )
+        for rid, (cf, step) in rras.items()
+    ])
+    parts, schema = [], ARCHIVE_SCHEMA
+    if partitioned:
+        rolled = rolled.withColumn(
+            # epoch-day INTEGER, never a calendar string: from_unixtime
+            # renders through the session timezone, so the same table
+            # written from two sessions would shear its partitions (the
+            # repo rule is epoch bigints end-to-end)
+            "day", F.expr(f"CAST(`{T}` DIV 86400 AS BIGINT)")
+        ).withColumn("bucket", F.pmod(F.xxhash64(F.col(NAME)), n_buckets))
+        parts, schema = ["day", "bucket"], PARTITION_SCHEMA
+
+    staging = f"{root}/_staging-{uuid.uuid4().hex}"
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    fs = Path(root).getFileSystem(spark._jsc.hadoopConfiguration())
+    try:
+        # the partitioned write sorts each task by its directory columns
+        # anyway; extending the keys with (name, t) costs the same sort
+        # and makes each file's row order independent of how the
+        # upstream shuffles were coalesced — adjacent names compress
+        # better and give row groups selective name statistics
+        rolled.sortWithinPartitions("rra", *parts, NAME, T).write.partitionBy(
+            "rra", *parts
+        ).parquet(staging)
+        for rid in rras:
+            src, dst = Path(f"{staging}/rra={rid}"), Path(f"{root}/{rid}")
+            fs.delete(dst, True)
+            if fs.exists(src):
+                if not fs.rename(src, dst):
+                    raise OSError(f"could not move {src} to {dst}")
+            else:  # no rows: an empty archive, readable like any other
+                spark.createDataFrame([], schema).write.partitionBy(
+                    *parts
+                ).parquet(f"{root}/{rid}")
+    finally:
+        fs.delete(Path(staging), True)
     for cf, step in specs:
-        path = f"{root}/{cf}_{step}"
-        rolled = consolidate(sf, step, cf=cf, heartbeat=heartbeat)
-        if partitioned:
-            (
-                rolled.withColumn(
-                    # epoch-day INTEGER, never a calendar string:
-                    # from_unixtime renders through the session
-                    # timezone, so the same table written from two
-                    # sessions would shear its partitions (the repo
-                    # rule is epoch bigints end-to-end)
-                    "day", F.expr(f"CAST(`{T}` DIV 86400 AS BIGINT)")
-                )
-                .withColumn(
-                    "bucket", F.pmod(F.xxhash64(F.col(NAME)), n_buckets)
-                )
-                .write.mode("overwrite")
-                .partitionBy("day", "bucket")
-                .parquet(path)
-            )
-            out.add(cf, step, spark.read.parquet(path), buckets=n_buckets)
-        else:
-            rolled.write.mode("overwrite").parquet(path)
-            out.add(cf, step, spark.read.parquet(path))
+        df = spark.read.schema(schema).parquet(f"{root}/{cf}_{step}")
+        out.add(cf, step, df, buckets=n_buckets if partitioned else None)
     return out
 
 

@@ -75,28 +75,32 @@ def _make_handler(catalog: DataFrame, now: int | None):
             self.wfile.write(_PIXEL_GIF)
 
         def _handle_agg(self, cmd: str, q: dict):
-            # http/pixel.go pixelAggHandler: the pixel goes out FIRST,
-            # then each form pair name=value queues one command.
+            # http/pixel.go pixelAggHandler: every request gets the
+            # pixel, and each form pair name=value queues one command.
             # Sscanf("%f") semantics: a numeric PREFIX parses
             # ("1.5x" -> 1.5), and the FIRST value with no numeric
             # prefix aborts the whole loop (pixel.go:133-137 returns),
             # dropping every remaining pair — not just the bad one.
+            # Commands are queued BEFORE the pixel goes out, so a
+            # client that has its response sees its commands queued.
             import time as _time
 
-            self._send_pixel()
             t = now if now is not None else int(_time.time())
-            for name, vals in q.items():
-                for v in vals:
-                    m = _FLOAT_PREFIX.match(v.lstrip())
-                    if not m:
-                        _LOG.warning(
-                            "pixel %s: bad value %r=%r (rest dropped)",
-                            cmd, name, v,
+            try:
+                for name, vals in q.items():
+                    for v in vals:
+                        m = _FLOAT_PREFIX.match(v.lstrip())
+                        if not m:
+                            _LOG.warning(
+                                "pixel %s: bad value %r=%r (rest dropped)",
+                                cmd, name, v,
+                            )
+                            return
+                        self.server.agg_commands.append(
+                            (cmd, name, float(m.group(0)), t)
                         )
-                        return
-                    self.server.agg_commands.append(
-                        (cmd, name, float(m.group(0)), t)
-                    )
+            finally:
+                self._send_pixel()
 
         def do_POST(self):
             # the reference's ParseForm reads urlencoded POST bodies

@@ -158,25 +158,25 @@ def _parsed(spark, sf_dir):
     return parse_statsd_packets(statsd_packets(spark, sf_dir))
 
 
+def _flush_family(spark, sf_dir, metric):
+    """statsd_flush over the parsed packets of one metric type."""
+    parsed = _parsed(spark, sf_dir)
+    return statsd_flush(parsed.where(F.col("metric") == metric), FLUSH, "stats")
+
+
 @register("statsd_flush_counters", sql=flush_counters_sql(PARSED_SQL, FLUSH))
 def statsd_flush_counters(spark, sf_dir):
-    from ..aggregator import _flush_counters
-
-    return _flush_counters(_parsed(spark, sf_dir), FLUSH, "stats")
+    return _flush_family(spark, sf_dir, "c")
 
 
 @register("statsd_flush_gauges", sql=flush_gauges_sql(PARSED_SQL, FLUSH))
 def statsd_flush_gauges(spark, sf_dir):
-    from ..aggregator import _flush_gauges
-
-    return _flush_gauges(_parsed(spark, sf_dir), FLUSH, "stats")
+    return _flush_family(spark, sf_dir, "g")
 
 
 @register("statsd_flush_timers", sql=flush_timers_sql(PARSED_SQL, FLUSH))
 def statsd_flush_timers(spark, sf_dir):
-    from ..aggregator import _flush_timers
-
-    return _flush_timers(_parsed(spark, sf_dir), FLUSH, "stats")
+    return _flush_family(spark, sf_dir, "ms")
 
 
 @register(

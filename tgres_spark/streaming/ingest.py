@@ -239,7 +239,7 @@ def run_statsd_gauges_pipeline(
     at the same second break to the larger value — max of the (t, v)
     struct is exactly the batch tmax-then-max-v rule) plus the
     window's micro6-summed delta adjustments. Window-local semantics
-    matching the batch authority `_flush_gauges` bit-for-bit; append
+    matching the batch authority `statsd_flush` bit-for-bit; append
     mode emits each window once its watermark passes."""
     from ..model import micro6
 
