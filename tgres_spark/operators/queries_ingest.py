@@ -25,6 +25,7 @@ from ..pipeline import dedup as dd_sql
 from ..registry import register
 from ..sources.graphite import parse_graphite_lines, parse_graphite_lines_sql
 from ..sources.statsd import parse_statsd_packets, parse_statsd_packets_sql
+from ..streaming.runner import read_batches
 
 FLUSH = 60
 
@@ -433,7 +434,7 @@ def streaming_dedup_incremental(spark, sf_dir):
         f"{work}/ckpt",
         inc.schema,
     )
-    return spark.read.parquet(f"{work}/out/b*")
+    return read_batches(spark, f"{work}/out")
 
 
 @register(
@@ -664,7 +665,7 @@ def streaming_prep_increment(spark, sf_dir):
         spark, f"{work}/in", f"{work}/index", f"{work}/bench",
         f"{work}/out", f"{work}/ckpt", docs.schema,
     )
-    return spark.read.parquet(f"{work}/out/b*").select(
+    return read_batches(spark, f"{work}/out").select(
         "doc_id", "gopher_keep", "contaminated", "dup_corpus",
         "dup_increment", "keep",
     )
@@ -811,7 +812,7 @@ def streaming_semdedup_increment(spark, sf_dir):
         spark, f"{work}/in", f"{work}/idx", f"{work}/out",
         f"{work}/ckpt", inc.schema,
     )
-    return spark.read.parquet(f"{work}/out/b*").select(
+    return read_batches(spark, f"{work}/out").select(
         "vec_id", "cell", "dup_corpus", "dup_increment", "keep"
     )
 
@@ -869,7 +870,7 @@ def streaming_ivf_search(spark, sf_dir):
         spark, f"{work}/in", f"{work}/index", f"{work}/out",
         f"{work}/ckpt", q.schema,
     )
-    return spark.read.parquet(f"{work}/out/b*").select(
+    return read_batches(spark, f"{work}/out").select(
         "query_id", "neighbor_id", "dist", "rank"
     )
 

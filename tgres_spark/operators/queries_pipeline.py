@@ -12,6 +12,7 @@ from ..pipeline import prep as pp
 from ..pipeline import similarity as sim
 from ..pipeline import textstats as tx
 from ..registry import register
+from ..streaming.runner import read_batches
 
 
 def _docs(spark, sf_dir):
@@ -384,7 +385,7 @@ def streaming_scene_cuts(spark, sf_dir):
     run_scene_cut_stream(
         spark, f"{work}/in", f"{work}/out", f"{work}/ckpt", docs.schema
     )
-    return spark.read.parquet(f"{work}/out/b*")
+    return read_batches(spark, f"{work}/out")
 
 
 @register("mm_phash_dedup", sql=mm.mm_phash_dedup_sql())

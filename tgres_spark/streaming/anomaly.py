@@ -37,6 +37,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .runner import parquet_source, run_to_end
+
 _OUT_SCHEMA = StructType(
     [
         StructField("name", StringType()),
@@ -121,17 +123,5 @@ def run_anomaly_stream(
     k: float = 2.0,
     files_per_trigger: int | None = None,
 ) -> None:
-    reader = spark.readStream.schema(schema)
-    if files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", files_per_trigger)
-    src = reader.parquet(in_dir)
-    scored = streaming_anomaly(src, points=points, k=k)
-    q = (
-        scored.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    src = parquet_source(spark, in_dir, schema, files_per_trigger)
+    run_to_end(streaming_anomaly(src, points=points, k=k), checkpoint, path=out_dir)

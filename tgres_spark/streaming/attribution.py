@@ -26,7 +26,11 @@ accumulated input.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
+
+# the published relation: the highest-numbered committed snapshot only
+from .refresh import read_latest_snapshot  # noqa: F401
+from .refresh import run_cumulative_refresh, run_delta_refresh
 
 
 def run_attribution_stream(
@@ -38,19 +42,11 @@ def run_attribution_stream(
     files_per_trigger: int = 1,
 ) -> None:
     from ..tpch import attribution_relation
-    from .refresh import run_cumulative_refresh
 
     run_cumulative_refresh(
         spark, in_dir, out_dir, checkpoint, schema,
         attribution_relation, files_per_trigger,
     )
-
-
-def read_latest_snapshot(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The published relation: the highest-numbered snapshot only."""
-    from .refresh import read_latest_snapshot as _r
-
-    return _r(spark, out_dir)
 
 
 def run_attribution_delta_stream(
@@ -76,7 +72,6 @@ def run_attribution_delta_stream(
     streaming_rfm stays on cumulative refresh because its corpus
     means are genuinely global."""
     from ..tpch import attribution_rollup, attribution_user_relation
-    from .refresh import run_delta_refresh
 
     run_delta_refresh(
         spark, in_dir, out_dir, checkpoint, schema,

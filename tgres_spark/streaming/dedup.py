@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .runner import overwrite_table, parquet_source, run_to_end
+
 
 def streaming_dedup_keepers(docs: DataFrame) -> DataFrame:
     """The streaming aggregation: (h, n_dups, keeper_id) per distinct
@@ -49,24 +51,13 @@ def run_dedup_stream(
     """Drive the dedup stream over a parquet file-drop source until no
     input remains (availableNow), rewriting the keeper table from the
     full state each batch (complete mode)."""
-    docs = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(in_dir)
+    docs = parquet_source(spark, in_dir, schema, files_per_trigger)
+    run_to_end(
+        streaming_dedup_keepers(docs),
+        checkpoint,
+        batch_fn=overwrite_table(out_dir),
+        mode="complete",
     )
-    kept = streaming_dedup_keepers(docs)
-
-    def sink(bdf: DataFrame, batch_id: int) -> None:
-        bdf.write.mode("overwrite").parquet(out_dir)
-
-    q = (
-        kept.writeStream.outputMode("complete")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def run_dedup_stream_updates(
@@ -84,25 +75,11 @@ def run_dedup_stream_updates(
     documents the per-flush write is proportional to the batch's novel
     hashes, not the corpus (complete mode's rewrite is the demo-scale
     convenience; this is what a production sink compacts from)."""
-    from pyspark.sql import functions as F
-
-    docs = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(in_dir)
-    )
-    kept = streaming_dedup_keepers(docs)
 
     def sink(bdf: DataFrame, batch_id: int) -> None:
         bdf.withColumn("batch_id", F.lit(batch_id)).write.mode(
             "append"
         ).parquet(out_dir)
 
-    q = (
-        kept.writeStream.outputMode("update")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    docs = parquet_source(spark, in_dir, schema, files_per_trigger)
+    run_to_end(streaming_dedup_keepers(docs), checkpoint, batch_fn=sink, mode="update")

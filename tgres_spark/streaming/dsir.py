@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .runner import parquet_source, run_to_end
+
 
 def run_dsir_stream(
     spark: SparkSession,
@@ -29,14 +31,5 @@ def run_dsir_stream(
 ) -> None:
     from ..pipeline.textstats import dsir_score_stream
 
-    src = spark.readStream.schema(schema).parquet(in_dir)
-    out = dsir_score_stream(src, model_row)
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    src = parquet_source(spark, in_dir, schema)
+    run_to_end(dsir_score_stream(src, model_row), checkpoint, path=out_dir)

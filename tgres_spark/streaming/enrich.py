@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..model import micro6
+from .runner import parquet_source, run_to_end, slot_end
 
 
 def enrich_window_agg(
@@ -54,12 +55,7 @@ def enrich_window_agg(
             ),
         )
     )
-    return agg.select(
-        "segment",
-        F.unix_timestamp(F.col("window.end")).cast("bigint").alias("t"),
-        "n_events",
-        "total",
-    )
+    return agg.select("segment", slot_end().alias("t"), "n_events", "total")
 
 
 def run_enrich_stream(
@@ -72,17 +68,9 @@ def run_enrich_stream(
     step_s: int = 3600,
     watermark_s: int = 60,
 ) -> None:
-    src = spark.readStream.schema(schema).parquet(in_dir)
+    src = parquet_source(spark, in_dir, schema)
     out = enrich_window_agg(src, dim, step_s=step_s, watermark_s=watermark_s)
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_to_end(out, checkpoint, path=out_dir)
 
 
 def run_asof_stream(
@@ -114,18 +102,8 @@ def run_asof_stream(
     lag case.)"""
     from ..operators.asof import asof_backward
 
-    src = spark.readStream.schema(schema).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(in_dir)
-
     def sink(bdf: DataFrame, batch_id: int) -> None:
         out = asof_backward(bdf, right, on, t, left_cols, right_cols)
         out.write.mode("append").parquet(out_dir)
 
-    q = (
-        src.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_to_end(parquet_source(spark, in_dir, schema, 1), checkpoint, batch_fn=sink)

@@ -15,9 +15,10 @@ would need.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
-from ..operators.sketch import hll_registers
+from ..operators.sketch import bloom_sketch, cms_sketch, histogram_bins, hll_registers
+from .runner import overwrite_table, parquet_source, run_to_end
 
 
 def run_hll_stream(
@@ -33,24 +34,9 @@ def run_hll_stream(
     """Fold the stream into the register table (complete mode — the
     driver contract wants the final relation; an at-scale variant
     would emit register CHANGES in update mode)."""
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(in_dir)
-    )
+    src = parquet_source(spark, in_dir, schema, files_per_trigger)
     regs = hll_registers(src, group_col, key_col)
-
-    def sink(bdf: DataFrame, batch_id: int) -> None:
-        bdf.write.mode("overwrite").parquet(out_dir)
-
-    q = (
-        regs.writeStream.outputMode("complete")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_to_end(regs, checkpoint, batch_fn=overwrite_table(out_dir), mode="complete")
 
 
 def run_histogram_stream(
@@ -69,26 +55,9 @@ def run_histogram_stream(
     count/min and HLL's max), so the final bin relation — and any
     quantile read off it — is bit-identical to the batch sketch over
     the same rows."""
-    from ..operators.sketch import histogram_bins
-
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(in_dir)
-    )
+    src = parquet_source(spark, in_dir, schema, files_per_trigger)
     hist = histogram_bins(src, group_col, value_col, width=width)
-
-    def sink(bdf: DataFrame, batch_id: int) -> None:
-        bdf.write.mode("overwrite").parquet(out_dir)
-
-    q = (
-        hist.writeStream.outputMode("complete")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_to_end(hist, checkpoint, batch_fn=overwrite_table(out_dir), mode="complete")
 
 
 def run_cms_stream(
@@ -104,26 +73,9 @@ def run_cms_stream(
     across micro-batches (the same + state family as the histogram),
     so the final sketch — and any point query off it — is
     bit-identical to the batch cms_sketch over the same rows."""
-    from ..operators.sketch import cms_sketch
-
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(in_dir)
-    )
+    src = parquet_source(spark, in_dir, schema, files_per_trigger)
     sk = cms_sketch(src, key_col)
-
-    def sink(bdf: DataFrame, batch_id: int) -> None:
-        bdf.write.mode("overwrite").parquet(out_dir)
-
-    q = (
-        sk.writeStream.outputMode("complete")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_to_end(sk, checkpoint, batch_fn=overwrite_table(out_dir), mode="complete")
 
 
 def run_bloom_stream(
@@ -143,23 +95,6 @@ def run_bloom_stream(
     is exactly-once-equivalent under retries with no dedup bookkeeping
     at all. Final word table is bit-identical to the batch
     bloom_sketch over the same rows."""
-    from ..operators.sketch import bloom_sketch
-
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(in_dir)
-    )
+    src = parquet_source(spark, in_dir, schema, files_per_trigger)
     sk = bloom_sketch(src, group_col, key_col)
-
-    def sink(bdf: DataFrame, batch_id: int) -> None:
-        bdf.write.mode("overwrite").parquet(out_dir)
-
-    q = (
-        sk.writeStream.outputMode("complete")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_to_end(sk, checkpoint, batch_fn=overwrite_table(out_dir), mode="complete")

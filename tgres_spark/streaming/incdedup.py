@@ -17,6 +17,9 @@ incoming datapoint (receiver/dscache.go:1).
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
+
+from .runner import batch_dir, parquet_source, run_to_end
 
 
 def run_incdedup_stream(
@@ -33,24 +36,12 @@ def run_incdedup_stream(
     idx = spark.read.parquet(index_path)
 
     def _score(batch, batch_id: int) -> None:
-        (
-            dedup_incremental_score(batch, idx)
-            .write.mode("overwrite")
-            .parquet(f"{out_dir}/b{batch_id:06d}")
+        dedup_incremental_score(batch, idx).write.mode("overwrite").parquet(
+            batch_dir(out_dir, batch_id)
         )
 
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(in_dir)
-    )
-    q = (
-        src.writeStream.foreachBatch(_score)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    src = parquet_source(spark, in_dir, schema, files_per_trigger)
+    run_to_end(src, checkpoint, batch_fn=_score)
 
 
 def run_index_update_stream(
@@ -85,18 +76,8 @@ def run_index_update_stream(
             compact_threshold=compact_threshold,
         )
 
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(in_dir)
-    )
-    q = (
-        src.writeStream.foreachBatch(_update)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    src = parquet_source(spark, in_dir, schema, files_per_trigger)
+    run_to_end(src, checkpoint, batch_fn=_update)
 
 
 def run_prep_increment_stream(
@@ -152,7 +133,6 @@ def run_prep_increment_stream(
     )
     from ..pipeline.prep import INC_DUP_THRESHOLD
     from ..pipeline.textstats import gopher_filter
-    from pyspark.sql import functions as F
 
     thr = float(INC_DUP_THRESHOLD if threshold is None else threshold)
 
@@ -209,7 +189,7 @@ def run_prep_increment_stream(
                 .alias("keep"),
             )
         )
-        verdict.write.mode("overwrite").parquet(f"{out_dir}/b{batch_id:06d}")
+        verdict.write.mode("overwrite").parquet(batch_dir(out_dir, batch_id))
         dedup_index_update(
             spark,
             index_dir,
@@ -218,18 +198,8 @@ def run_prep_increment_stream(
             compact_threshold=compact_threshold,
         )
 
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(in_dir)
-    )
-    q = (
-        src.writeStream.foreachBatch(_prep)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    src = parquet_source(spark, in_dir, schema, files_per_trigger)
+    run_to_end(src, checkpoint, batch_fn=_prep)
 
 
 def run_semdedup_increment_stream(
@@ -261,8 +231,6 @@ def run_semdedup_increment_stream(
     index already holding its own vectors classifies identically
     (self-pairs excluded; batch-mate pairs carry the same id rule)."""
     import glob as _glob
-
-    import pyspark.sql.functions as F
 
     from ..model import literal_df
     from ..pipeline.similarity import (
@@ -346,7 +314,7 @@ def run_semdedup_increment_stream(
                 .alias("keep"),
             )
             .write.mode("overwrite")
-            .parquet(f"{out_dir}/b{batch_id:06d}")
+            .parquet(batch_dir(out_dir, batch_id))
         )
         # write-back AFTER the verdict lands: generation = batch_id+1
         # (generation 0 is the corpus), overwrite => replay idempotent
@@ -355,15 +323,5 @@ def run_semdedup_increment_stream(
         ).parquet(f"{index_dir}/g{batch_id + 1:06d}")
         ba.unpersist()
 
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(in_dir)
-    )
-    q = (
-        src.writeStream.foreachBatch(_score)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    src = parquet_source(spark, in_dir, schema, files_per_trigger)
+    run_to_end(src, checkpoint, batch_fn=_score)

@@ -18,6 +18,10 @@ The streaming WMEAN uses arrival-order weighting inside the slot
 needs the previous point which streaming can't see across batches
 without state — consolidate() remains the batch/backfill path, and
 `statsd_flush`'s window aggregation IS expressible streaming-side.
+
+Every pipeline here is one plan over a shared shape: the (start, end]
+slot window is runner.group_by_slot, and the run itself is
+runner.run_to_end into a parquet file sink.
 """
 
 from __future__ import annotations
@@ -28,6 +32,7 @@ from pyspark.sql import functions as F
 from ..model import NAME, T, VALUE, micro6
 from ..sources.graphite import parse_graphite_lines
 from ..sources.statsd import parse_statsd_packets
+from .runner import group_by_slot, parquet_source, run_to_end, slot_end
 
 
 def read_graphite_stream(
@@ -78,12 +83,9 @@ def streaming_consolidate(
     inside the watermark revises the slot (update mode), like PDP
     accumulation before movePdpToDps.
 
-    Slot alignment: Spark windows are [start, end) but RRA slots are
-    (start, end] (rra.go movePdpToDps) — shifting event time by -1s
-    maps boundary points into the same end-labeled slot as the batch
-    consolidate(), so streaming and batch results are identical on
-    integer-second data."""
-    with_ts = parsed.withColumn("ts", (F.col(T) - 1).cast("timestamp"))
+    Slot alignment: group_by_slot's -1 s shift maps (start, end] RRA
+    slots onto Spark's [start, end) windows, so streaming and batch
+    results are identical on integer-second data."""
     # avg/sum accumulate micro6 BIGINT micro-units exactly like batch
     # consolidate() — a plain double sum's result depends on partial-
     # aggregation order (varies run to run, and vs DuckDB), which
@@ -98,16 +100,8 @@ def streaming_consolidate(
         "count": F.count(VALUE).cast("double"),
         "last": F.max_by(VALUE, "ts"),
     }[cf]
-    w = (
-        with_ts.withWatermark("ts", f"{watermark_s} seconds")
-        .groupBy(F.window("ts", f"{step_s} seconds"), F.col(NAME))
-        .agg(agg.alias(VALUE))
-    )
-    return w.select(
-        F.col(NAME),
-        F.unix_timestamp(F.col("window.end")).cast("bigint").alias(T),
-        F.col(VALUE).cast("double"),
-    )
+    w = group_by_slot(parsed, step_s, watermark_s, NAME).agg(agg.alias(VALUE))
+    return w.select(F.col(NAME), slot_end().alias(T), F.col(VALUE).cast("double"))
 
 
 def run_file_pipeline(
@@ -128,15 +122,7 @@ def run_file_pipeline(
     """
     parsed = read_graphite_stream(spark, in_path)
     rolled = streaming_consolidate(parsed, step_s=step_s, watermark_s=watermark_s)
-    q = (
-        rolled.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_to_end(rolled, checkpoint, path=out_path)
 
 
 def run_statsd_file_pipeline(
@@ -157,30 +143,20 @@ def run_statsd_file_pipeline(
     Input files carry `t packet` lines so replays are deterministic
     (see read_statsd_stream)."""
     parsed = read_statsd_stream(spark, in_path)
-    counters = parsed.where(F.col("metric") == "c").withColumn(
-        "ts", (F.col(T) - 1).cast("timestamp")
-    )
     rate = (
-        counters.withWatermark("ts", f"{watermark_s} seconds")
-        .groupBy(F.window("ts", f"{flush_s} seconds"), F.col(NAME))
+        group_by_slot(
+            parsed.where(F.col("metric") == "c"), flush_s, watermark_s, NAME
+        )
         .agg(
             (F.sum(F.col(VALUE) / F.col("sample")) / float(flush_s)).alias(VALUE)
         )
         .select(
             F.concat(F.lit("stats."), F.col(NAME)).alias(NAME),
-            F.unix_timestamp(F.col("window.end")).cast("bigint").alias(T),
+            slot_end().alias(T),
             F.col(VALUE).cast("double"),
         )
     )
-    q = (
-        rate.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_to_end(rate, checkpoint, path=out_path)
 
 
 def run_statsd_timers_pipeline(
@@ -202,29 +178,14 @@ def run_statsd_timers_pipeline(
     from ..aggregator import timer_stats_from_sorted
 
     parsed = read_statsd_stream(spark, in_path)
-    timers = parsed.where(F.col("metric") == "ms").withColumn(
-        "ts", (F.col(T) - 1).cast("timestamp")
-    )
     grouped = (
-        timers.withWatermark("ts", f"{watermark_s} seconds")
-        .groupBy(F.window("ts", f"{flush_s} seconds"), F.col(NAME))
-        .agg(F.array_sort(F.collect_list(VALUE)).alias("arr"))
-        .select(
-            F.col(NAME),
-            F.unix_timestamp(F.col("window.end")).cast("bigint").alias("slot"),
-            "arr",
+        group_by_slot(
+            parsed.where(F.col("metric") == "ms"), flush_s, watermark_s, NAME
         )
+        .agg(F.array_sort(F.collect_list(VALUE)).alias("arr"))
+        .select(F.col(NAME), slot_end().alias("slot"), "arr")
     )
-    stats = timer_stats_from_sorted(grouped, "stats")
-    q = (
-        stats.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_to_end(timer_stats_from_sorted(grouped, "stats"), checkpoint, path=out_path)
 
 
 def run_statsd_gauges_pipeline(
@@ -241,15 +202,11 @@ def run_statsd_gauges_pipeline(
     window's micro6-summed delta adjustments. Window-local semantics
     matching the batch authority `statsd_flush` bit-for-bit; append
     mode emits each window once its watermark passes."""
-    from ..model import micro6
-
     parsed = read_statsd_stream(spark, in_path)
-    g = parsed.where(F.col("metric") == "g").withColumn(
-        "ts", (F.col(T) - 1).cast("timestamp")
-    )
     agg = (
-        g.withWatermark("ts", f"{watermark_s} seconds")
-        .groupBy(F.window("ts", f"{flush_s} seconds"), F.col(NAME))
+        group_by_slot(
+            parsed.where(F.col("metric") == "g"), flush_s, watermark_s, NAME
+        )
         .agg(
             F.max(
                 F.when(~F.col("delta"), F.struct(F.col(T), F.col(VALUE)))
@@ -263,22 +220,14 @@ def run_statsd_gauges_pipeline(
         )
         .select(
             F.concat(F.lit("stats.gauges."), F.col(NAME)).alias(NAME),
-            F.unix_timestamp(F.col("window.end")).cast("bigint").alias(T),
+            slot_end().alias(T),
             (
                 F.coalesce(F.col(f"last_set.{VALUE}"), F.lit(0.0))
                 + F.coalesce(F.col("d"), F.lit(0.0))
             ).cast("double").alias(VALUE),
         )
     )
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_to_end(agg, checkpoint, path=out_path)
 
 
 def run_pixel_counter_pipeline(
@@ -296,31 +245,21 @@ def run_pixel_counter_pipeline(
     as run_statsd_file_pipeline, but with the micro6 BIGINT fold so
     the registered query hash-checks (a plain double SUM is
     accumulation-order-dependent)."""
-    src = spark.readStream.schema(schema).parquet(in_path)
-    counters = src.where(F.col("metric") == "c").withColumn(
-        "ts", (F.col("t") - 1).cast("timestamp")
-    )
+    src = parquet_source(spark, in_path, schema)
     mv = F.floor(
         F.col("value") / F.col("sample") * 1000000.0 + F.lit(0.5)
     ).cast("bigint")
     rate = (
-        counters.withWatermark("ts", f"{watermark_s} seconds")
-        .groupBy(F.window("ts", f"{flush_s} seconds"), F.col("name"))
+        group_by_slot(
+            src.where(F.col("metric") == "c"), flush_s, watermark_s, NAME
+        )
         .agg(F.sum(mv).alias("smv"))
         .select(
-            F.concat(F.lit("stats."), F.col("name")).alias("name"),
-            F.unix_timestamp(F.col("window.end")).cast("bigint").alias("t"),
+            F.concat(F.lit("stats."), F.col(NAME)).alias(NAME),
+            slot_end().alias(T),
             (F.col("smv").cast("double") / 1000000.0 / float(flush_s)).alias(
                 "value"
             ),
         )
     )
-    q = (
-        rate.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_to_end(rate, checkpoint, path=out_path)

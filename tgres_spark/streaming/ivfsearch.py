@@ -21,7 +21,10 @@ maintained cache, never go around it; here the reads are a stream.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
+
+from .runner import batch_dir, parquet_source, run_to_end
 
 
 def run_ivf_search_stream(
@@ -39,8 +42,6 @@ def run_ivf_search_stream(
     """Each micro-batch of (vec_id, embedding) query rows searches the
     physical index and lands its per-query top-k as ``out/b<id>``
     (overwrite — replay rewrites identical content; stateless)."""
-    import pyspark.sql.functions as F
-
     from ..pipeline.similarity import ann_ivf_search_index_q
 
     def _search(batch, batch_id: int) -> None:
@@ -50,17 +51,7 @@ def run_ivf_search_stream(
         )
         ann_ivf_search_index_q(
             spark, index_dir, q, k=k, nprobe=nprobe, mod=mod
-        ).write.mode("overwrite").parquet(f"{out_dir}/b{batch_id:06d}")
+        ).write.mode("overwrite").parquet(batch_dir(out_dir, batch_id))
 
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(in_dir)
-    )
-    q = (
-        src.writeStream.foreachBatch(_search)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    src = parquet_source(spark, in_dir, schema, files_per_trigger)
+    run_to_end(src, checkpoint, batch_fn=_search)

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .runner import parquet_source, run_to_end
+
 
 def interval_join(
     left: DataFrame,
@@ -69,16 +71,8 @@ def run_interval_join_stream(
 ) -> None:
     """Both sides read from ONE file-drop source (split by event_type
     in-plan — a real deployment points two sources here)."""
-    src = spark.readStream.schema(schema).parquet(in_dir)
+    src = parquet_source(spark, in_dir, schema)
     left = src.where(F.col("event_type") == "click").select("user_id", "t")
     right = src.where(F.col("event_type") == "purchase").select("user_id", "t")
     joined = interval_join(left, right, window_s=window_s, watermark_s=watermark_s)
-    q = (
-        joined.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_to_end(joined, checkpoint, path=out_dir)

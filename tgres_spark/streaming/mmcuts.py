@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from .runner import batch_dir, parquet_source, run_to_end
+
 
 def run_scene_cut_stream(
     spark: SparkSession,
@@ -27,21 +29,8 @@ def run_scene_cut_stream(
     from ..pipeline.multimodal import mm_scene_cuts
 
     def _cuts(batch, batch_id: int) -> None:
-        (
-            mm_scene_cuts(batch)
-            .write.mode("overwrite")
-            .parquet(f"{out_dir}/b{batch_id:06d}")
-        )
+        out = batch_dir(out_dir, batch_id)
+        mm_scene_cuts(batch).write.mode("overwrite").parquet(out)
 
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(in_dir)
-    )
-    q = (
-        src.writeStream.foreachBatch(_cuts)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    src = parquet_source(spark, in_dir, schema, files_per_trigger)
+    run_to_end(src, checkpoint, batch_fn=_cuts)

@@ -13,6 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .runner import parquet_source, run_to_end
+
 
 def run_oov_stream(
     spark: SparkSession,
@@ -24,14 +26,5 @@ def run_oov_stream(
 ) -> None:
     from ..pipeline.textstats import oov_score_stream
 
-    src = spark.readStream.schema(schema).parquet(in_dir)
-    out = oov_score_stream(src, vocab_row)
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    src = parquet_source(spark, in_dir, schema)
+    run_to_end(oov_score_stream(src, vocab_row), checkpoint, path=out_dir)

@@ -14,41 +14,34 @@ a purchase arriving in batch N can flip segment letters assigned in
 batch N−1, exactly the cross-batch dependency per-batch processing
 cannot express. Reference analogue: the aggregator's flush-cycle
 republish (aggregator.go) — recompute the published view each cycle
-from accumulated input."""
+from accumulated input.
+
+Every deployment here is one ``foreachBatch`` function handed to
+runner.run_to_end, and every listing of ``raw/``, ``rawbase/``,
+``state/``, ``snap/`` and ``gen/`` is committed-only
+(runner.committed_batches): a generation a crash left without its
+_SUCCESS marker is invisible to readers and merge bases alike, and the
+replayed batch's overwrite completes it."""
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from .runner import (
+    batch_dir,
+    committed_batches,
+    parquet_source,
+    read_batches,
+    run_to_end,
+)
 
 
 def _raw_gens(spark: SparkSession, out_dir: str, kind: str) -> list[int]:
-    """Committed generations under ``out_dir/<kind>``: numbered b*
-    directories CONTAINING a _SUCCESS marker — a crash mid-write
-    leaves the dir uncommitted and invisible to every reader, and the
-    replayed batch's overwrite completes it (the manifest discipline
-    of dedup_index_update, with parquet's own job-commit marker as
-    the manifest)."""
-    from .catalog import _fs
-
-    fs, d, jvm = _fs(spark, f"{out_dir}/{kind}")
-    if not fs.exists(d):
-        return []
-    out = []
-    for st in fs.listStatus(d):
-        n = st.getPath().getName()
-        if (
-            n.startswith("b")
-            and n[1:].isdigit()
-            and fs.exists(
-                jvm.org.apache.hadoop.fs.Path(
-                    f"{out_dir}/{kind}/{n}/_SUCCESS"
-                )
-            )
-        ):
-            out.append(int(n[1:]))
-    return sorted(out)
+    """Committed generations under ``out_dir/<kind>``."""
+    return committed_batches(spark, f"{out_dir}/{kind}")
 
 
 def _live_raw(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -63,13 +56,9 @@ def _live_raw(spark: SparkSession, out_dir: str) -> DataFrame:
     parts = []
     if bases:
         floor = bases[-1]
-        parts.append(
-            spark.read.parquet(f"{out_dir}/rawbase/b{floor:06d}")
-        )
+        parts.append(spark.read.parquet(batch_dir(f"{out_dir}/rawbase", floor)))
     parts.extend(
-        spark.read.parquet(f"{out_dir}/raw/b{g:06d}")
-        for g in raws
-        if g > floor
+        spark.read.parquet(batch_dir(f"{out_dir}/raw", g)) for g in raws if g > floor
     )
     u = parts[0]
     for p in parts[1:]:
@@ -94,17 +83,12 @@ def _fold_raw(spark: SparkSession, out_dir: str, batch_id: int) -> None:
     if bases:
         prev = bases[-1]
         fs, _, jvm = _fs(spark, out_dir)
-        for g in [g for g in raws if g <= prev]:
-            fs.delete(
-                jvm.org.apache.hadoop.fs.Path(f"{out_dir}/raw/b{g:06d}"), True
-            )
-        for b in bases[:-1]:
-            fs.delete(
-                jvm.org.apache.hadoop.fs.Path(f"{out_dir}/rawbase/b{b:06d}"),
-                True,
-            )
+        retired = [batch_dir(f"{out_dir}/raw", g) for g in raws if g <= prev]
+        retired += [batch_dir(f"{out_dir}/rawbase", b) for b in bases[:-1]]
+        for d in retired:
+            fs.delete(jvm.org.apache.hadoop.fs.Path(d), True)
     _live_raw(spark, out_dir).write.mode("overwrite").parquet(
-        f"{out_dir}/rawbase/b{batch_id:06d}"
+        batch_dir(f"{out_dir}/rawbase", batch_id)
     )
 
 
@@ -137,44 +121,23 @@ def run_cumulative_refresh(
     raw_compact_every: int | None = None,
 ) -> None:
     def _refresh(batch, batch_id: int) -> None:
-        batch.write.mode("overwrite").parquet(
-            f"{out_dir}/raw/b{batch_id:06d}"
-        )
+        batch.write.mode("overwrite").parquet(batch_dir(f"{out_dir}/raw", batch_id))
         allrows = _live_raw(spark, out_dir)
         relation_fn(allrows).write.mode("overwrite").parquet(
-            f"{out_dir}/snap/b{batch_id:06d}"
+            batch_dir(f"{out_dir}/snap", batch_id)
         )
         _maybe_fold_raw(spark, out_dir, batch_id, raw_compact_every)
 
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(in_dir)
-    )
-    q = (
-        src.writeStream.foreachBatch(_refresh)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    src = parquet_source(spark, in_dir, schema, files_per_trigger)
+    run_to_end(src, checkpoint, batch_fn=_refresh)
 
 
 def read_latest_snapshot(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The published relation: the highest-numbered snapshot only
-    (a replay's transient snapshot is unobservable through this).
-    Listing goes through the Hadoop FileSystem API — same abstraction
-    as the write path — so out_dir works on HDFS/S3A, not just the
-    local FS (catalog.py's _fs pattern)."""
-    from .catalog import _fs
-
-    fs, snapdir, _ = _fs(spark, f"{out_dir}/snap")
-    snaps = sorted(
-        st.getPath().getName()
-        for st in fs.listStatus(snapdir)
-        if st.getPath().getName().startswith("b")
-    )
-    return spark.read.parquet(f"{out_dir}/snap/{snaps[-1]}")
+    """The published relation: the highest-numbered COMMITTED snapshot
+    only — a replay's transient snapshot, or one a crash left without
+    its _SUCCESS marker, is unobservable through this."""
+    snaps = _raw_gens(spark, out_dir, "snap")
+    return spark.read.parquet(batch_dir(f"{out_dir}/snap", snaps[-1]))
 
 
 # --- per-key delta refresh (round 10) ----------------------------------------
@@ -232,27 +195,15 @@ def run_delta_refresh(
     long-lived stream's per-batch history read stays O(fold cadence)
     directories instead of O(total batches); None (default) keeps
     the unbounded-but-simple layout."""
-    from .catalog import _fs
 
     def _latest_state_before(batch_id: int):
-        fs, sdir, _ = _fs(spark, f"{out_dir}/state")
-        if not fs.exists(sdir):
-            return None
-        vers = sorted(
-            int(st.getPath().getName()[1:])
-            for st in fs.listStatus(sdir)
-            if st.getPath().getName().startswith("b")
-            and st.getPath().getName()[1:].isdigit()
-        )
-        vers = [v for v in vers if v < batch_id]
+        vers = [v for v in _raw_gens(spark, out_dir, "state") if v < batch_id]
         if not vers:
             return None
-        return spark.read.parquet(f"{out_dir}/state/b{vers[-1]:06d}")
+        return spark.read.parquet(batch_dir(f"{out_dir}/state", vers[-1]))
 
     def _refresh(batch, batch_id: int) -> None:
-        import pyspark.sql.functions as F
-
-        batch.write.mode("overwrite").parquet(f"{out_dir}/raw/b{batch_id:06d}")
+        batch.write.mode("overwrite").parquet(batch_dir(f"{out_dir}/raw", batch_id))
         keys = batch.select(key_col).distinct()
         hist = _live_raw(spark, out_dir)
         touched = key_relation_fn(
@@ -266,26 +217,15 @@ def run_delta_refresh(
                 touched
             )
         )
-        state.write.mode("overwrite").parquet(
-            f"{out_dir}/state/b{batch_id:06d}"
-        )
-        cur = spark.read.parquet(f"{out_dir}/state/b{batch_id:06d}")
+        state_dir = batch_dir(f"{out_dir}/state", batch_id)
+        state.write.mode("overwrite").parquet(state_dir)
+        cur = spark.read.parquet(state_dir)
         out = publish_fn(cur) if publish_fn is not None else cur
-        out.write.mode("overwrite").parquet(f"{out_dir}/snap/b{batch_id:06d}")
+        out.write.mode("overwrite").parquet(batch_dir(f"{out_dir}/snap", batch_id))
         _maybe_fold_raw(spark, out_dir, batch_id, raw_compact_every)
 
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(in_dir)
-    )
-    q = (
-        src.writeStream.foreachBatch(_refresh)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    src = parquet_source(spark, in_dir, schema, files_per_trigger)
+    run_to_end(src, checkpoint, batch_fn=_refresh)
 
 
 # --- frozen-generation pack refresh (round 12) --------------------------------
@@ -323,7 +263,6 @@ def run_generation_pack(
     recomputes the same offsets from the same priors and its
     overwrite is idempotent, and later batches never touch earlier
     files (frozenness is pytest-pinned on mtimes)."""
-    import pyspark.sql.functions as F
 
     def _refresh(batch, batch_id: int) -> None:
         rel = pack_fn(batch)
@@ -331,9 +270,7 @@ def run_generation_pack(
             g for g in _raw_gens(spark, out_dir, "gen") if g < batch_id
         ]
         if prior:
-            pri = spark.read.parquet(
-                *[f"{out_dir}/gen/b{g:06d}" for g in prior]
-            )
+            pri = spark.read.parquet(*[batch_dir(f"{out_dir}/gen", g) for g in prior])
             offs = pri.groupBy("lang").agg(
                 (F.max("shard") + 1).cast("bigint").alias("off")
             )
@@ -346,25 +283,12 @@ def run_generation_pack(
                 .cast("bigint")
                 .alias("shard"),
             )
-        rel.write.mode("overwrite").parquet(f"{out_dir}/gen/b{batch_id:06d}")
+        rel.write.mode("overwrite").parquet(batch_dir(f"{out_dir}/gen", batch_id))
 
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(in_dir)
-    )
-    q = (
-        src.writeStream.foreachBatch(_refresh)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    src = parquet_source(spark, in_dir, schema, files_per_trigger)
+    run_to_end(src, checkpoint, batch_fn=_refresh)
 
 
 def read_generations(spark: SparkSession, out_dir: str) -> DataFrame:
     """The published shard table: the union of committed generations."""
-    gens = _raw_gens(spark, out_dir, "gen")
-    return spark.read.parquet(
-        *[f"{out_dir}/gen/b{g:06d}" for g in gens]
-    )
+    return read_batches(spark, f"{out_dir}/gen")

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .runner import parquet_source, run_to_end
+
 
 def streaming_sessions(
     events: DataFrame, gap_s: int = 1800, watermark_s: int = 60
@@ -69,17 +71,6 @@ def run_sessionize_stream(
 ) -> None:
     """Drive the session stream over a parquet file-drop source until
     no input remains (availableNow), appending closed sessions."""
-    reader = spark.readStream.schema(schema)
-    if files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", files_per_trigger)
-    events = reader.parquet(in_dir)
+    events = parquet_source(spark, in_dir, schema, files_per_trigger)
     sessions = streaming_sessions(events, gap_s=gap_s, watermark_s=watermark_s)
-    q = (
-        sessions.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_to_end(sessions, checkpoint, path=out_dir)
